@@ -91,11 +91,12 @@ def q_streaming_running_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 1000000).cast("bigint").alias("value"),
     )
     fn = RunningReduceFunction("user_id", "event_id", "value", "sum", value_type="bigint")
-    # ~1.5k keys: narrow state widths beat the batch default (each
-    # partition costs a state-store instance + an Arrow round-trip per
-    # batch). Swept 4/8/16/32 at sf0.1: 1.95/1.50/1.43/1.52 s — 16 is
-    # the flat bottom of the curve.
-    with shuffle_partitions(spark, 16):
+    # narrow state widths beat the batch default (each partition costs
+    # a state-store instance + an Arrow round-trip per batch, and only
+    # KEY_GROUPS=32 groups carry work). Swept 2/4/8/16/32/default(32)
+    # at sf0.1, local[32] on a 4-core host: medians 2.06/2.05/2.43/
+    # 3.26/5.19/4.85 s — 4 is the bottom of the curve.
+    with shuffle_partitions(spark, 4):
         out = run_to_completion(
             process_keyed(s, ["user_id"], fn, output_mode="update"),
             output_mode="update",

@@ -7,21 +7,14 @@ the watermark passes (``InternalTimerServiceImpl.java:169``
 API never reaches them, so this is capability parity with the full
 design, not just the executable trim.
 
-Two backends, one user-facing class:
-
-- **compat** (default, used by the registry query):
-  ``applyInPandasWithState`` with ``GroupStateTimeout.EventTimeTimeout``.
-  The wrapper appends a ``_timers array<bigint>`` field to the user's
-  state and arms Spark's single per-group timeout with ``min(timers)``;
-  when the watermark passes it, the group wakes with ``hasTimedOut`` and
-  every due timer fires in timestamp order — a faithful multi-timer
-  service on the one-timeout primitive. TTL is processing-time, tracked
-  in a ``_atime bigint`` field (StateTtlConfig analog).
-- **tws** (``streaming/tws.py``): Spark 4's transformWithStateInPandas,
-  with native multi-timer + TTL support. Requires the ``protobuf``
-  package for its state-server protocol — absent in this container, so
-  it is import-gated and covered by its own forward-path tests only
-  where available.
+The backend is ``applyInPandasWithState`` with
+``GroupStateTimeout.EventTimeTimeout``. The wrapper appends a
+``_timers array<bigint>`` field to the user's state and arms Spark's
+single per-group timeout with ``min(timers)``; when the watermark passes
+it, the group wakes with ``hasTimedOut`` and every due timer fires in
+timestamp order — a faithful multi-timer service on the one-timeout
+primitive. TTL is processing-time, tracked in a ``_atime bigint`` field
+(StateTtlConfig analog).
 
 Firing boundary (verified empirically, test_event_timers.py): a timer
 at T fires once watermark > T, STRICTLY — Spark's EventTimeTimeout
@@ -84,7 +77,7 @@ class EventTimeProcessFunction:
     as absent — the reference's StateTtlConfig analog. None disables.
     """
 
-    #: Spark DDL schema strings (user fields only; backends may append
+    #: Spark DDL schema strings (user fields only; the backend appends
     #: bookkeeping fields internally)
     state_schema: str = ""
     output_schema: str = ""
@@ -125,19 +118,10 @@ def process_keyed_event_time(
     keys: list[str],
     fn: EventTimeProcessFunction,
     output_mode: str = "update",
-    backend: str = "compat",
 ) -> DataFrame:
     """Wire an EventTimeProcessFunction into a streaming grouped plan.
     Requires a watermark upstream (``operators.windows.with_watermark``)
-    — without one the timers never fire. See module docstring for the
-    backend split."""
-    if backend == "tws":
-        from min_flink_spark.streaming import tws
-
-        return tws.process_keyed_event_time_tws(df, keys, fn, output_mode)
-    if backend != "compat":
-        raise ValueError(f"unknown event-timer backend: {backend!r}")
-
+    — without one the timers never fire."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     n_user = _n_user_fields(fn)

@@ -51,12 +51,23 @@ class MetricsRecorder(StreamingQueryListener):
     def state_rows(self) -> int:
         """Total state-store rows across operators in the LAST progress
         that reported any (state sizing is the 100 TB streaming memory
-        signal)."""
+        signal). Each operator counts its own state rows: the continuous
+        keyed reduce (``RunningReduceFunction``) keeps one row per key
+        group, not per key (``stateful.KEY_GROUPS``)."""
         for p in reversed(self.progress):
             ops = p.get("stateOperators") or []
             if ops:
                 return sum(int(o.get("numRowsTotal", 0)) for o in ops)
         return 0
+
+    def rows_dropped_late(self) -> int:
+        """Input rows the stateful operators dropped as behind the
+        watermark, summed over every recorded progress event."""
+        return sum(
+            int(o.get("numRowsDroppedByWatermark", 0))
+            for p in self.progress
+            for o in p.get("stateOperators") or []
+        )
 
 
 def record_metrics(spark: SparkSession) -> MetricsRecorder:

@@ -1,12 +1,11 @@
 """Event-time timer service tests (streaming/event_timers.py):
-watermark-driven firing, the strict-> boundary, multi-timer ordering,
-TTL, and the TWS forward-path gate."""
+watermark-driven firing, the strict-> boundary, multi-timer ordering
+and TTL."""
 
 import os
 import tempfile
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from min_flink_spark.streaming.event_timers import (
@@ -167,22 +166,6 @@ def test_value_state_ttl_expires(spark, tmp_path):
             )
 
     assert [g[1] for g in got] == [False, False]  # expired between runs
-
-
-def test_tws_backend_gated_without_protobuf(spark):
-    """The TWS forward path must fail loudly (not crash a query) when
-    protobuf is absent — and run where it is present."""
-    from min_flink_spark.streaming.tws import tws_available
-
-    s = _stream_rows(
-        spark, [(1, __import__("datetime").datetime(2024, 1, 1))], "k bigint, ts timestamp"
-    ).withWatermark("ts", "1 second")
-    if not tws_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            process_keyed_event_time(s, ["k"], _OneTimer(1000), backend="tws")
-    else:  # pragma: no cover - exercised only on protobuf-equipped clusters
-        df = process_keyed_event_time(s, ["k"], _OneTimer(1000), backend="tws")
-        assert df.isStreaming
 
 
 def test_event_timer_survives_checkpoint_restart(spark, tmp_path):

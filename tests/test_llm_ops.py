@@ -508,9 +508,7 @@ def test_score_with_model_real_runtime_if_available(spark):
     """VERDICT r3 stretch #8: when a real inference runtime ships in the
     container, drive an actual model through score_with_model's
     load-once Arrow path; until then skip with the reason recorded
-    (gated exactly like streaming/tws.py gates protobuf — the container
-    currently ships neither torch nor onnxruntime, and installs are
-    disallowed)."""
+    (neither torch nor onnxruntime is importable)."""
     import importlib.util
 
     import pytest as _pytest

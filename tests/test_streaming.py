@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from min_flink_spark.operators.windows import tumble, with_watermark
+from min_flink_spark.streaming.metrics import record_metrics, stop_recording
 from min_flink_spark.streaming.runner import (
     run_foreach_batch,
     run_to_completion,
@@ -107,7 +108,16 @@ def test_watermark_drops_late_data(spark, tmp_path):
         [(99, "2024-01-01 09:00:00")], "id bigint, ts_s string"
     ).select("id", F.col("ts_s").cast("timestamp").alias("ts"))
     late.coalesce(1).write.mode("append").parquet(d)
-    run_foreach_batch(pipeline(), sink, output_mode="append", checkpoint_dir=ckpt)
+    rec = record_metrics(spark)
+    try:
+        run_foreach_batch(pipeline(), sink, output_mode="append", checkpoint_dir=ckpt)
+        for _ in range(40):  # the listener bus is async
+            if rec.rows_dropped_late():
+                break
+            time.sleep(0.25)
+    finally:
+        stop_recording(spark, rec)
+    assert rec.rows_dropped_late() >= 1
 
     starts = {r["window_start"].strftime("%H:%M"): r["n"] for r in collected}
     # run 2 starts with watermark 10:30 (max 10:40 − 10min): the 09:00

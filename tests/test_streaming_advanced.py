@@ -184,35 +184,79 @@ def test_aggregate_state_carries_across_restarts(spark, sf_dir, tmp_path):
     assert all(abs(latest[k] - want[k]) < 1e-6 for k in want)
 
 
-def test_running_reduce_across_micro_batches(spark, tmp_path):
-    """True multi-batch stateful processing in ONE run: three files,
-    maxFilesPerTrigger=1 → three micro-batches; the running reduce must
-    seed each batch with the state left by the previous one."""
-    import time as _t
+@pytest.mark.parametrize(
+    "op,value_type", [("sum", "double"), ("min", "bigint"), ("max", "double")]
+)
+def test_running_reduce_across_micro_batches(spark, tmp_path, op, value_type):
+    """True multi-batch stateful processing: three files,
+    maxFilesPerTrigger=1 → three micro-batches, and the query stops and
+    resumes from its checkpoint before the third, so the key-group state
+    must survive a restart. Two keys share a key group, a third sits in
+    another, and the second file skips one of the pair, whose state must
+    outlive its group-mate's update; every emission must equal the batch
+    window reduce."""
+    import random
 
-    from min_flink_spark.streaming.stateful import RunningReduceFunction
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    d = str(tmp_path / "mb_stream")
-    # key 7 gets values 1,2 | 3,4 | 5,6 across three files (event order
-    # within and across files follows event_id)
-    for i in range(3):
-        spark.createDataFrame(
-            [(7, 2 * i + 1, float(2 * i + 1)), (7, 2 * i + 2, float(2 * i + 2))],
-            "user_id bigint, event_id bigint, value double",
-        ).coalesce(1).write.mode("append").parquet(d)
-        _t.sleep(1.1)  # distinct mod-times → deterministic file order
+    from min_flink_spark.functions.aggregations import running_reduce_plan
+    from min_flink_spark.streaming.stateful import KEY_GROUPS, RunningReduceFunction
 
-    s = stream_parquet(
-        spark, d, "user_id bigint, event_id bigint, value double",
-        max_files_per_trigger=1,
-    )
-    fn = RunningReduceFunction("user_id", "event_id", "value", "sum")
-    out = run_to_completion(
-        process_keyed(s, ["user_id"], fn, output_mode="update"), output_mode="update"
-    )
-    got = {r["event_id"]: r["running"] for r in out.collect()}
-    # cumulative sums of 1..6: state crossed two batch boundaries
-    assert got == {1: 1.0, 2: 3.0, 3: 6.0, 4: 10.0, 5: 15.0, 6: 21.0}
+    group = {
+        r["k"]: r["g"]
+        for r in spark.range(64)
+        .select(F.col("id").alias("k"), F.pmod(F.xxhash64("k"), F.lit(KEY_GROUPS)).alias("g"))
+        .collect()
+    }
+    a = next(k for k in group if any(group[j] == group[k] for j in group if j > k))
+    b = next(j for j in group if j > a and group[j] == group[a])
+    c = next(k for k in group if group[k] != group[a])
+
+    d, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    os.makedirs(d)
+    schema = f"user_id bigint, event_id bigint, value {value_type}"
+    rnd = random.Random(7)
+    dtype, scale = ("int64", 1) if value_type == "bigint" else ("float64", 4)
+
+    def write_file(i, keys):
+        # event order within a file differs from its physical order;
+        # values are quarters so every double sum is exact
+        ev = [(k, 10 * i + j * 3 + n) for j, k in enumerate(keys) for n in range(3)]
+        rnd.shuffle(ev)
+        path = os.path.join(d, f"part-{i}.parquet")
+        pq.write_table(pa.table({
+            "user_id": pa.array([k for k, _ in ev], "int64"),
+            "event_id": pa.array([e for _, e in ev], "int64"),
+            "value": pa.array([rnd.randint(-40, 40) / scale for _ in ev], dtype),
+        }), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # file order = event order
+
+    got = []
+
+    def run():
+        s = stream_parquet(spark, d, schema, max_files_per_trigger=1)
+        fn = RunningReduceFunction("user_id", "event_id", "value", op, value_type)
+        run_foreach_batch(
+            process_keyed(s, ["user_id"], fn, output_mode="update"),
+            lambda df, _: got.extend(df.collect()),
+            checkpoint_dir=ckpt,
+        )
+
+    write_file(0, (a, b, c))
+    write_file(1, (a, c))
+    run()
+    write_file(2, (a, b, c))
+    run()  # a new query: state comes back from the checkpoint
+
+    want = {
+        (r["user_id"], r["event_id"]): r[f"running_{op}_value"]
+        for r in running_reduce_plan(
+            spark.read.schema(schema).parquet(d), ["user_id"], "value", op, "event_id"
+        ).collect()
+    }
+    assert len(got) == len(want) == 24  # one emission per input record
+    assert {(r["user_id"], r["event_id"]): r["running"] for r in got} == want
 
 
 def test_rocksdb_state_store_backend(spark, sf_dir, tmp_path):
